@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import fixpoint
+
 Term = str  # '?var' or constant
 
 
@@ -281,28 +283,17 @@ def describe(triples: DataFrame, nodes: DataFrame, max_iter: int = 10) -> DataFr
     triples = triples.localCheckpoint(eager=False)
     # a bnode OBJECT is an IRI-position term ("_:..." with object_is_iri);
     # a string literal that merely looks like "_:x" must not be followed
-    is_bnode_obj = F.col("object_is_iri") & F.col("object").startswith("_:")
-    frontier = nodes.select(F.col("node").alias("subject")).distinct()
-    seen = frontier.localCheckpoint(eager=True)
-    out = triples.join(seen, "subject", "inner")
-    for _ in range(max_iter):
-        bnodes = (
-            out.where(is_bnode_obj)
-            .select(F.col("object").alias("subject"))
-            .distinct()
-            .join(seen, "subject", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if bnodes.limit(1).count() == 0:
-            break
-        seen = seen.unionByName(bnodes).localCheckpoint(eager=True)
-        out = out.unionByName(triples.join(bnodes, "subject", "inner"))
-    else:
-        raise RuntimeError(
-            f"describe() bnode closure did not converge in {max_iter} rounds "
-            "(deeper anonymous structure than expected); raise max_iter"
-        )
-    return out.select(
+    refs = triples.where(F.col("object_is_iri") & F.col("object").startswith("_:")).select(
+        "subject", F.col("object").alias("ref")
+    )
+
+    def follow(seen: DataFrame) -> DataFrame:
+        reached = refs.join(seen, "subject").select(F.col("ref").alias("subject"))
+        return seen.unionByName(reached).distinct()
+
+    start = nodes.select(F.col("node").alias("subject")).distinct()
+    seen = fixpoint.iterate(start, follow, max_iter=max_iter, name="describe")
+    return triples.join(seen, "subject").select(
         "graph", "subject", "predicate", "object", "object_is_iri", "object_datatype"
     ).dropDuplicates()
 
@@ -363,7 +354,8 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
             cur = follow(cur, ">", step[1], negate=True)
         elif kind == "range":
             _, pred, lo, hi = step
-            assert 0 <= lo <= hi, f"range step needs 0 <= n <= m, got {lo},{hi}"
+            if not 0 <= lo <= hi:
+                raise ValueError(f"range step needs 0 <= n <= m, got {lo},{hi}")
             for _ in range(lo):
                 cur = follow(cur, ">", pred)
             for _ in range(hi - lo):
@@ -373,81 +365,18 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
     return cur
 
 
-def transitive_closure(
-    triples: DataFrame,
-    pred: str,
-    max_iter: int = 20,
-    local_threshold: int = 50_000,
-) -> DataFrame:
+def transitive_closure(triples: DataFrame, pred: str, max_iter: int = 20) -> DataFrame:
     """``pred+`` reachability pairs (src, dst): one-or-more hops — the
     reference's recursive-traversal analog (curation.clj:303-314).
     SPARQL's ``pred*`` (zero-or-more) additionally includes the
     reflexive (x, x) pair for every node; union the node set in the
-    caller when zero-hop semantics are needed.
-
-    Path-doubling fixpoint: each round joins the closure with itself, so
-    a diameter-d graph converges in ⌈log2 d⌉ rounds instead of d — the
-    round count, not per-round work, dominates at cluster scale (each
-    round is a full shuffle + barrier). localCheckpoint per round cuts
-    the exponential lineage."""
-    edges = (
-        triples.where(F.col("predicate") == pred)
-        .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
-        .distinct()
+    caller when zero-hop semantics are needed. Computed by
+    :func:`.fixpoint.closure` (driver-local under its pair budget,
+    path doubling otherwise; raises after ``max_iter`` rounds)."""
+    edges = triples.where(F.col("predicate") == pred).select(
+        F.col("subject").alias("node"), F.col("object").alias("next")
     )
-    # Adaptive execution, same pattern (and threshold discipline) as
-    # canonicalize.connected_components: a driver-side fixpoint costs a
-    # full job + Catalyst pass per round regardless of data size, so an
-    # edge set below ``local_threshold`` is collected and closed on the
-    # driver in one pass (ontology/:next chains are dimension-scale by
-    # nature); bigger graphs take the distributed doubling loop below.
-    # Same result either way. The threshold is half of CC's 200k: CC's
-    # output is bounded by the node count, while a closure can be
-    # superlinear in its input, so the driver-side set budget is kept
-    # smaller.
-    probe = edges.limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
-        # monotone set saturation — cycle-safe (a DAG assumption would be
-        # wrong for general ``pred+``), terminates because reach sets only
-        # grow and are bounded by the node set; cost is proportional to
-        # the closure being emitted, which any engine must materialize
-        reach: dict[str, set[str]] = {}
-        for r in probe:
-            reach.setdefault(r[0], set()).add(r[1])
-        changed = True
-        while changed:
-            changed = False
-            for u, s in reach.items():
-                add: set[str] = set()
-                for v in s:
-                    nxt = reach.get(v)
-                    if nxt is not None and not nxt <= s:
-                        add |= nxt
-                if add - s:
-                    s |= add
-                    changed = True
-        pairs = sorted((u, v) for u, s in reach.items() for v in s)
-        return edges.sparkSession.createDataFrame(pairs, "src string, dst string")
-
-    # lazy checkpoint + count: ONE job materializes the checkpoint and
-    # returns the size (an eager checkpoint followed by count ran two
-    # jobs per round — pure driver-side scheduling overhead, which
-    # dominates the fixpoint at interactive scales and is still one
-    # round-trip saved per round on a cluster)
-    closure = edges.localCheckpoint(eager=False)
-    prev_count = closure.count()
-    for _ in range(max_iter):
-        doubled = (
-            closure.alias("l")
-            .join(closure.alias("r"), F.col("l.dst") == F.col("r.src"))
-            .select(F.col("l.src").alias("src"), F.col("r.dst").alias("dst"))
-        )
-        closure = closure.union(doubled).distinct().localCheckpoint(eager=False)
-        n = closure.count()
-        if n == prev_count:
-            break
-        prev_count = n
-    return closure
+    return fixpoint.closure(edges, max_iter=max_iter).toDF("src", "dst")
 
 
 def text_search(triples: DataFrame, term: str, predicate: str | None = None) -> DataFrame:

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import fixpoint
+
 
 def connected_components(
     edges: DataFrame,
@@ -81,11 +83,6 @@ def connected_components(
     # as (u, v) with u > v; at the fixpoint every component is a single
     # star centered at its min node, so `e` IS the (node, component) map
     # for non-root nodes (Kiveris et al. SOCC'14, Theorem 1).
-    # lazy checkpoints + one count: a single job materializes both
-    # all_nodes and e (two eager checkpoints each re-ran the edge plan
-    # as separate jobs; one scheduling round-trip per fixpoint step is
-    # the dominant cost at dictionary scales and free savings at lake
-    # scale)
     all_nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -97,17 +94,12 @@ def connected_components(
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .where(F.col("u") != F.col("v"))
     )
-    e = (
-        sym.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_cnt = e.count()
-    converged = False
-    for rnd in range(1, max_iter + 1):
+    e = sym.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct()
+
+    def star(g: DataFrame) -> DataFrame:
         # large-star: every node u links its strictly-larger neighbors to
         # min(Γ(u) ∪ {u}); halves long chains by skipping over u.
-        nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        nbrs = g.select("u", "v").union(g.select(F.col("v").alias("u"), F.col("u").alias("v")))
         lmin = nbrs.groupBy("u").agg(F.min("v").alias("m")).select(
             "u", F.least("m", "u").alias("m")
         )
@@ -121,29 +113,24 @@ def connected_components(
         # small-star: every node u links its smaller neighbors (and itself)
         # to the min of that set; flattens local stars.
         smin = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             large.join(smin, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smin.select("u", F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        small = small.localCheckpoint(eager=False)
-        cnt = small.count()  # one job: materializes the checkpoint too
-        # fixpoint ⟺ same edge SET: equal size + empty one-way difference
-        if cnt == prev_cnt and small.exceptAll(e).limit(1).count() == 0:
-            e = small
-            stats.update(path="distributed", rounds=rnd)
-            converged = True
-            break
-        e, prev_cnt = small, cnt
-    if not converged:
-        # mid-run star edges may still split one component into several
-        # stars — unlike monotone label propagation there is no safe
-        # partial answer, so fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
+
+    def same_edge_set(prev: DataFrame, cur: DataFrame, prev_n: int, n: int) -> bool:
+        # the star step is not monotone: equal size alone is no fixpoint,
+        # and mid-run stars may still split a component, so an unconverged
+        # run has no safe partial answer (iterate raises)
+        return n == prev_n and cur.exceptAll(prev).limit(1).count() == 0
+
+    stats["path"] = "distributed"
+    e = fixpoint.iterate(
+        e, star, same_edge_set, max_iter=max_iter, name="connected_components", stats=stats
+    )
     return all_nodes.join(
         e.select(F.col("u").alias("node"), F.col("v").alias("parent")), "node", "left_outer"
     ).select("node", F.coalesce("parent", "node").alias("component"))

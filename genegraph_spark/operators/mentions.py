@@ -122,10 +122,6 @@ MAP_SCHEMA = (
     "url string, doc_id long, version int, lang string, is_del boolean, ok boolean, "
     "m_cidx array<int>, m_cnt array<int>, m_pos array<int>"
 )
-# keep_text variant: consumers that need BOTH triples and the extracted
-# text (golden tests, downstream text pipelines) get it from the same
-# single Arrow pass instead of paying extraction twice
-MAP_SCHEMA_TEXT = MAP_SCHEMA + ", warc_ts timestamp, etext string"
 
 
 def alias_from_dictionary(dictionary: DataFrame) -> DataFrame:
@@ -233,7 +229,7 @@ def gazetteer_payload(alias_rows, canon_of: dict[str, str]):
     return by_label, e_to_c, canon_iris
 
 
-def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = False):
+def make_page_mapper(by_label, e_to_c, use_golden_text: bool):
     """Arrow-batched mapInPandas function: html → extracted text →
     tokenize → gazetteer match → contextual disambiguation → per-page
     canonical mention counts. This is the north-star hot path: one pass
@@ -293,7 +289,7 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = 
                 link_text(t) if (t is not None and not d) else ([], [], [])
                 for t, d in zip(texts, is_del)
             ]
-            out = {
+            yield pd.DataFrame({
                 "url": pdf["url"],
                 "doc_id": pdf["doc_id"],
                 "version": pdf["version"],
@@ -303,11 +299,7 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = 
                 "m_cidx": [m[0] for m in mentions],
                 "m_cnt": [m[1] for m in mentions],
                 "m_pos": [m[2] for m in mentions],
-            }
-            if keep_text:
-                out["warc_ts"] = pdf["warc_ts"]
-                out["etext"] = texts
-            yield pd.DataFrame(out)
+            })
 
     return mapper
 

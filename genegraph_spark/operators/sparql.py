@@ -50,8 +50,8 @@ same convention the repo's triple store uses (``functions/iri.py``).
 Scale: a parsed query compiles to exactly the plan the programmatic
 combinators would build — pattern constants push to the parquet scan,
 shared variables become shuffled equi-joins under Catalyst/AQE, VALUES
-becomes a broadcast join, ``*``/``+`` paths use the path-doubling
-fixpoint of :func:`.algebra.transitive_closure` (⌈log2 d⌉ rounds). The
+becomes a broadcast join, ``*``/``+`` paths use the closure of
+:func:`.fixpoint.closure` (path doubling, ⌈log2 d⌉ rounds). The
 parse itself is driver-side and O(query text), never O(data).
 """
 
@@ -66,6 +66,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import algebra as A
+from . import fixpoint
 
 RDF_TYPE = "rdf:type"
 # the Jena full-text dataset predicate (database/instance.clj:29-31 text
@@ -1112,8 +1113,8 @@ class _Compiler:
         """(node, next) tagged endpoint pairs for a path expression.
         seq/alt keep bag semantics; ?/*/+/{n,m} are distinct per SPARQL
         1.1 §9.3. Each base step is a predicate-filtered scan (pushdown);
-        * / + use the path-doubling fixpoint of
-        :func:`.algebra.transitive_closure` (⌈log2 d⌉ shuffle rounds).
+        * / + use :func:`.fixpoint.closure` (path doubling, ⌈log2 d⌉
+        shuffle rounds).
 
         Under ``graph_var`` (GRAPH ?g / per-graph mode) every pairs
         frame also carries the raw ``_g`` graph column and every path
@@ -1121,6 +1122,7 @@ class _Compiler:
         graphs — the per-graph corpus chain relies on this."""
         kind = p[0]
         in_g = self.graph_var is not None
+        keys = ("_g",) if in_g else ()
 
         def base(df: DataFrame) -> DataFrame:
             cols = [_enc_subject().alias("node"), _enc_object().alias("next")]
@@ -1142,13 +1144,13 @@ class _Compiler:
                 sel.append(F.col("_g"))
             return q.select(*sel)
         if kind == "seq":
-            return self._seq_pairs(self.path_pairs(p[1]), self.path_pairs(p[2]))
+            return fixpoint.compose(self.path_pairs(p[1]), self.path_pairs(p[2]), keys)
         if kind == "alt":
             return self.path_pairs(p[1]).unionByName(self.path_pairs(p[2]))
         if kind == "opt":
             return self._identity().unionByName(self.path_pairs(p[1])).distinct()
         if kind in ("star", "plus"):
-            closure = self._closure(self.path_pairs(p[1]))
+            closure = fixpoint.closure(self.path_pairs(p[1]), keys)
             if kind == "star":
                 closure = closure.unionByName(self._identity()).distinct()
             return closure
@@ -1157,22 +1159,13 @@ class _Compiler:
             base = self.path_pairs(sub)
             cur = self._identity() if lo == 0 else base
             for _ in range(max(lo - 1, 0)):
-                cur = self._seq_pairs(cur, base)
+                cur = fixpoint.compose(cur, base, keys)
             out = cur
             for _ in range(hi - lo):
-                cur = self._seq_pairs(cur, base)
+                cur = fixpoint.compose(cur, base, keys)
                 out = out.unionByName(cur)
             return out.distinct()
         raise ValueError(f"unknown path node {p!r}")
-
-    def _seq_pairs(self, a: DataFrame, b: DataFrame) -> DataFrame:
-        a, b = a.alias("l"), b.alias("r")
-        cond = F.col("l.next") == F.col("r.node")
-        sel = [F.col("l.node").alias("node"), F.col("r.next").alias("next")]
-        if self.graph_var is not None:
-            cond = cond & (F.col("l._g") == F.col("r._g"))
-            sel.append(F.col("l._g").alias("_g"))
-        return a.join(b, cond).select(*sel)
 
     def _identity(self) -> DataFrame:
         if self.graph_var is not None:
@@ -1187,21 +1180,6 @@ class _Compiler:
             self.triples.select(_enc_object().alias("node"))
         ).distinct()
         return nodes.select("node", F.col("node").alias("next"))
-
-    def _closure(self, edges: DataFrame, max_iter: int = 20) -> DataFrame:
-        """Path-doubling closure over a pairs frame — the generalized form
-        of :func:`.algebra.transitive_closure` (same convergence guard).
-        Under graph mode the doubling join co-keys on ``_g``."""
-        closure = edges.distinct().localCheckpoint(eager=True)
-        prev = closure.count()
-        for _ in range(max_iter):
-            doubled = self._seq_pairs(closure, closure)
-            closure = closure.union(doubled).distinct().localCheckpoint(eager=True)
-            n = closure.count()
-            if n == prev:
-                return closure
-            prev = n
-        raise RuntimeError(f"path closure did not converge in {max_iter} rounds")
 
     # -- groups --------------------------------------------------------------
     def group(self, elements: list) -> DataFrame:

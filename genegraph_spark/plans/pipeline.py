@@ -52,18 +52,12 @@ def construct_kg(
     pages: DataFrame | None = None,
     dictionary: DataFrame | None = None,
     use_golden_text: bool = False,
-    keep_text: bool = False,
 ) -> PipelineResult:
     """Build the KG from the pages table (synthesized from sf_dir unless
     given). ``use_golden_text`` skips the pandas-UDF extraction (the
     fixture carries golden text) — used by oracle-facing queries so the
     DuckDB SQL side stays expressible; the extraction itself is verified
     byte-identical by its own query + tests.
-
-    ``keep_text``: carry the extracted text (and warc_ts) through the
-    single Arrow pass so ``live_pages`` shares the extraction with the
-    triples path — consumers wanting both pay ONE extraction. Default
-    off: the triples hot path ships only slim int arrays.
     """
     if pages is None:
         pages = fixtures.pages_df(spark, sf_dir)
@@ -107,7 +101,7 @@ def construct_kg(
     #    scale linearly (independent heaps), while the JVM only ever sees
     #    slim rows (url, ids, flags, int arrays). The page text never
     #    enters a shuffle.
-    mapper = mentions.make_page_mapper(by_label, e_to_c, use_golden_text, keep_text=keep_text)
+    mapper = mentions.make_page_mapper(by_label, e_to_c, use_golden_text)
     # ONE partition probe decides the low-split (fixture/single-file)
     # regime for the whole pipeline — lake inputs arrive in >= parallelism
     # splits and skip both branches below. (Probing is a physical-planning
@@ -130,9 +124,7 @@ def construct_kg(
         # extra tasks cost more than they save (measured 2.8s -> 3.5s on
         # kg_triples).
         pages = pages.repartition(dp, "url")
-    mapped = pages.mapInPandas(
-        mapper, mentions.MAP_SCHEMA_TEXT if keep_text else mentions.MAP_SCHEMA
-    )
+    mapped = pages.mapInPandas(mapper, mentions.MAP_SCHEMA)
     if low_split:
         # Pre-shuffle the slim mapper output by url to EXACTLY dp
         # partitions: the version-compaction window below is keyed on
@@ -207,26 +199,19 @@ def construct_kg(
     )
 
     # live pages with text, for golden tests / downstream consumers that
-    # need the extracted text
-    if keep_text:
-        # same Arrow pass as the triples path: zero extra extraction
-        live_pages = live_slim.select(
-            "url", "warc_ts", F.col("etext").alias("text"), "lang", "version", "doc_id"
-        )
+    # need the extracted text: a lazy second derivation, only evaluated if
+    # a consumer reads it (the triples hot path never does)
+    if use_golden_text:
+        extracted = pages.withColumn("etext", F.col("text"))
     else:
-        # lazy second derivation — only evaluated if a consumer reads it
-        # (the triples hot path never does)
-        if use_golden_text:
-            extracted = pages.withColumn("etext", F.col("text"))
-        else:
-            extracted = pages.withColumn("etext", extract_text(F.col("html")))
-        extracted = extracted.withColumn("is_del", is_tombstone(F.col("html")))
-        valid = extracted.where(F.col("etext").isNotNull() | F.col("is_del"))
-        live_pages = (
-            versioned.latest_version(valid, key="url", version="version")
-            .where(~F.col("is_del"))
-            .select("url", "warc_ts", F.col("etext").alias("text"), "lang", "version", "doc_id")
-        )
+        extracted = pages.withColumn("etext", extract_text(F.col("html")))
+    extracted = extracted.withColumn("is_del", is_tombstone(F.col("html")))
+    valid = extracted.where(F.col("etext").isNotNull() | F.col("is_del"))
+    live_pages = (
+        versioned.latest_version(valid, key="url", version="version")
+        .where(~F.col("is_del"))
+        .select("url", "warc_ts", F.col("etext").alias("text"), "lang", "version", "doc_id")
+    )
 
     return PipelineResult(
         pages=pages,
@@ -274,7 +259,8 @@ def run_to_store(
     (stream.clj:150-170) re-expressed as batch anti-join + MERGE."""
     from ..sinks.named_graph import NamedGraphStore
 
-    assert not (resume and incremental), "resume and incremental are exclusive modes"
+    if resume and incremental:
+        raise ValueError("resume and incremental are exclusive modes")
     store = NamedGraphStore(spark, store_path)
     pages = kw.pop("pages", None)
     if pages is None:

@@ -168,17 +168,26 @@ class NamedGraphStore:
         writer."""
         last = self.last_commit()
         commit = 0 if last is None else last + 1
-        with self._commit_lock(commit):
-            # TOCTOU guard (same as compact/expire): another writer may have
-            # committed between reading `last` and acquiring the lock; a
-            # crash-REPLAY is unaffected (the orphan commit has no manifest,
-            # so last_commit() is unchanged and the replay proceeds).
+        with self._head_lock(last, "merge"):
+            return self._merge_locked(triples, delete_graphs, last, commit, graph_versions)
+
+    @contextmanager
+    def _head_lock(self, last: int | None, op: str):
+        """Hold the lock of commit ``last + 1`` and fail fast unless the
+        head is still ``last`` — the TOCTOU guard every writer needs:
+        another writer may have committed between reading ``last`` and
+        acquiring the lock (a merge would then reuse its commit id, a
+        compaction would overwrite it from an older snapshot, an expiry
+        would reclaim data a manifest it never saw references). A
+        crash-REPLAY is unaffected: the orphan commit has no manifest, so
+        ``last_commit()`` is unchanged and the replay proceeds."""
+        with self._commit_lock(0 if last is None else last + 1):
             if self.last_commit() != last:
                 raise RuntimeError(
                     f"store advanced past commit {last!r} while acquiring the "
-                    "merge lock; re-run merge() against the new head"
+                    f"{op} lock; retry {op}() against the new head"
                 )
-            return self._merge_locked(triples, delete_graphs, last, commit, graph_versions)
+            yield
 
     @contextmanager
     def _commit_lock(self, commit: int):
@@ -356,16 +365,7 @@ class NamedGraphStore:
         if last is None:
             raise ValueError("nothing to compact: store has no commits")
         commit = last + 1
-        with self._commit_lock(commit):
-            # TOCTOU guard: a merge may have landed between reading `last`
-            # and acquiring the lock; its commit id would equal ours and
-            # this compaction (built from snapshot `last`) would silently
-            # overwrite it. Re-read under the lock and fail fast.
-            if self.last_commit() != last:
-                raise RuntimeError(
-                    f"store advanced past commit {last} while acquiring the "
-                    "compaction lock; retry compact()"
-                )
+        with self._head_lock(last, "compact"):
             live = self._read_segments(self._read_manifest(last))
             data_dir = f"data/c{commit:08d}"
             live.repartition("bucket").sortWithinPartitions(
@@ -391,7 +391,8 @@ class NamedGraphStore:
         ``expire_snapshots`` analog. Time travel to expired commits stops
         working (that is the point: bounded storage); lineage history is
         kept, only snapshot data is reclaimed. Returns removed data dirs."""
-        assert keep_last >= 1, "must retain at least the latest snapshot"
+        if keep_last < 1:
+            raise ValueError("must retain at least the latest snapshot")
         commits = sorted(
             int(m[1:-5]) for m in os.listdir(self._manifests)
             if m.startswith("c") and m.endswith(".json")
@@ -399,17 +400,7 @@ class NamedGraphStore:
         drop, keep = commits[:-keep_last], commits[-keep_last:]
         if not drop:
             return []
-        # guard the newest commit's lock so expiry never races a writer
-        with self._commit_lock(commits[-1] + 1):
-            # TOCTOU guard: a merge finishing between the listdir above and
-            # the lock acquisition would add a manifest this expiry did not
-            # account for — its data dir must not be reclaimed. Re-read
-            # under the lock and fail fast if the store advanced.
-            if self.last_commit() != commits[-1]:
-                raise RuntimeError(
-                    "store advanced while acquiring the expiry lock; "
-                    "retry expire_snapshots()"
-                )
+        with self._head_lock(commits[-1], "expire_snapshots"):
             live_dirs = {
                 d for c in keep for d in self._read_manifest(c)["buckets"].values()
             }

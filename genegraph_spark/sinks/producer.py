@@ -5,8 +5,7 @@ Reference analog: ``src/genegraph/sink/event.clj:78-98`` — the
 transformer serializes each event's model to JSON-LD and produces it to
 an output topic, recording produce metadata. Here the "topic" is an
 append-only parquet table partitioned by commit (at cluster scale: an
-Iceberg append, or ``df.write.format("kafka")`` —
-streaming.stream.kafka_writer builds that plan).
+Iceberg append, or ``df.write.format("kafka")``).
 
 Idempotence: each produce lands under ``commit=N``; replaying a commit
 overwrites its directory rather than double-appending (the same

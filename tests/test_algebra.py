@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from genegraph_spark.operators import algebra as A
+from genegraph_spark.operators import fixpoint
 from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA
 
 TRIPLES = [
@@ -97,6 +98,8 @@ def test_ld_path(spark, triples):
     assert {r["node"] for r in got.collect()} == {"dis1"}
     both = A.ld_path(triples, start, [("-", "subject_of")])
     assert {r["node"] for r in both.collect()} == {"assn1"}
+    with pytest.raises(ValueError, match="range step"):
+        A.ld_path(triples, start, [("range", "subClassOf", 2, 1)])
 
 
 def test_transitive_closure(triples):
@@ -106,6 +109,70 @@ def test_transitive_closure(triples):
         ("c1", "c2"), ("c2", "c3"), ("c3", "c4"),
         ("c1", "c3"), ("c2", "c4"), ("c1", "c4"),
     }
+
+
+def _reach(edges):
+    """Pure-Python one-or-more-hop reachability pairs."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+    out = set()
+    for src, stack in adj.items():
+        stack, seen = list(stack), set()
+        while stack:
+            v = stack.pop()
+            if v not in seen:
+                seen.add(v)
+                stack.extend(adj.get(v, ()))
+        out |= {(src, v) for v in seen}
+    return out
+
+
+@pytest.fixture
+def distributed_runs(monkeypatch):
+    """Names of the fixpoints that ran the distributed round loop."""
+    runs = []
+    real = fixpoint.iterate
+
+    def spy(*a, **k):
+        runs.append(k["name"])
+        return real(*a, **k)
+
+    monkeypatch.setattr(fixpoint, "iterate", spy)
+    return runs
+
+
+def _closure_pairs(spark, edges, **kw):
+    t = spark.createDataFrame([("g", a, "next", b, True, None) for a, b in edges], TRIPLE_SCHEMA)
+    return {(r.src, r.dst) for r in A.transitive_closure(t, "next", **kw).collect()}
+
+
+def test_closure_over_budget_goes_distributed(spark, monkeypatch, distributed_runs):
+    # 39 edges fit the probe, but their 780-pair closure does not fit the
+    # budget: saturation bails out mid-way to the distributed loop
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(39)]
+    assert _closure_pairs(spark, chain) == _reach(chain)
+    assert distributed_runs == []
+    monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 100)
+    assert _closure_pairs(spark, chain) == _reach(chain)
+    assert distributed_runs == ["closure"]
+
+
+@pytest.mark.parametrize("budget", [fixpoint.PAIR_BUDGET, 0])
+def test_closure_clique_same_on_both_paths(spark, monkeypatch, budget):
+    nodes = [f"k{i}" for i in range(6)]
+    clique = [(a, b) for a in nodes for b in nodes if a != b]
+    monkeypatch.setattr(fixpoint, "PAIR_BUDGET", budget)
+    got = _closure_pairs(spark, clique)
+    assert got == _reach(clique) == {(a, b) for a in nodes for b in nodes}
+
+
+def test_closure_unconverged_raises(spark, monkeypatch):
+    # the distributed loop never returns a partial closure
+    monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 0)
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(5)]
+    with pytest.raises(RuntimeError, match="closure did not converge in 1 rounds"):
+        _closure_pairs(spark, chain, max_iter=1)
 
 
 def test_text_search(triples):

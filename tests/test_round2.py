@@ -366,7 +366,7 @@ def test_fix_offset_colon_repair():
     assert out[0]["ts"] == out[1]["ts"] is not None
 
 
-# -- as-of join, keep_text, isomorphism, stateful streaming ---------------------
+# -- as-of join, isomorphism, stateful streaming ---------------------
 
 def test_asof_join_union_merge(spark):
     from genegraph_spark.operators.versioned import asof_join
@@ -389,18 +389,6 @@ def test_asof_join_union_merge(spark):
         ("e", None, None),      # k2's only version is 2 > 1
         ("f", None, None),      # key absent from right
     }
-
-
-def test_construct_kg_keep_text_single_pass(spark, sf_dir):
-    from genegraph_spark.plans.pipeline import construct_kg
-
-    base = construct_kg(spark, sf_dir, use_golden_text=True)
-    fused = construct_kg(spark, sf_dir, use_golden_text=True, keep_text=True)
-    cols = ["url", "text", "lang", "version", "doc_id"]
-    a = {tuple(r) for r in base.live_pages.select(cols).collect()}
-    b = {tuple(r) for r in fused.live_pages.select(cols).collect()}
-    assert a == b
-    assert {tuple(r) for r in base.triples.collect()} == {tuple(r) for r in fused.triples.collect()}
 
 
 @pytest.mark.slow

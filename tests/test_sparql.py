@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from genegraph_spark.operators import fixpoint
 from genegraph_spark.operators import sparql as S
 
 REF_DIR = "/root/reference/src/genegraph/transform/gene_validity_refactor"
@@ -218,6 +219,11 @@ class TestCompiler:
             'SELECT DISTINCT ?z WHERE { ?a :name "carol" . ?a :knows? ?z }',
         ).collect()
         assert sorted(r.z for r in out) == ["urn:c", "urn:d"]
+
+    def test_paths_distributed(self, spark, graph, monkeypatch):
+        # the same answers when every closure runs the distributed loop
+        monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 0)
+        self.test_paths(spark, graph)
 
     def test_values_bag_semantics(self, spark, graph):
         # duplicate VALUES row duplicates solutions
@@ -1349,6 +1355,10 @@ class TestGraphPattern:
             ("urn:g1", "v1"), ("urn:g2", "v2"),
         ]
 
+    def test_path_inside_graph_var_stays_per_graph_distributed(self, spark, monkeypatch):
+        monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 0)
+        self.test_path_inside_graph_var_stays_per_graph(spark)
+
     def test_path_inside_constant_graph_works(self, spark, multi):
         out = S.sparql(
             multi,
@@ -2061,3 +2071,44 @@ class TestReviewR6Fixes:
             "?a ex:p ?v1 . ?b ex:p ?v2 . FILTER(?v1 = ?v2 && ?a != ?b) }"
         )
         assert S.sparql(t, q2).collect() == []
+
+
+class TestClosureRounds:
+    """SPARQL ``+`` closures forced onto the distributed round loop."""
+
+    Q = "SELECT ?a ?b WHERE { ?a <urn:next>+ ?b }"
+
+    @staticmethod
+    def chain(spark, n):
+        return T(spark, [iri(f"urn:n{i}", "urn:next", f"urn:n{i + 1}") for i in range(n)])
+
+    def test_unconverged_plus_path_raises(self, spark, monkeypatch):
+        monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 0)
+        real = fixpoint.iterate
+        monkeypatch.setattr(
+            fixpoint, "iterate", lambda *a, **k: real(*a, **{**k, "max_iter": 1})
+        )
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            S.sparql(self.chain(spark, 4), self.Q)
+
+    def test_jobs_per_round(self, spark, monkeypatch):
+        """A round is one action: a lazy checkpoint materialized by its
+        count. AQE submits map-stage jobs of its own for each action, so
+        the bound is on measured jobs per round: a chain of n edges takes
+        ceil(log2 n) + 1 rounds, 4 for n=8 and 6 for n=32. An eager
+        checkpoint plus a count measured 7 jobs per round."""
+        monkeypatch.setattr(fixpoint, "PAIR_BUDGET", 0)
+        sc = spark.sparkContext
+
+        def compile_jobs(n):
+            t = self.chain(spark, n)
+            group = f"closure-jobs-{n}"
+            sc.setJobGroup(group, group)
+            try:
+                S.sparql(t, self.Q)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert (compile_jobs(32) - compile_jobs(8)) / 2 <= 6

@@ -5,6 +5,7 @@ replaceNamedModel semantics, database/load.clj:72-87)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
@@ -229,6 +230,29 @@ def test_expire_keep_more_than_commits_is_noop(spark, tmp_path):
     store.merge(make(spark, [t("g1", "s", "p", "o")]))
     assert store.expire_snapshots(keep_last=5) == []
     assert store.triples().count() == 1
+    with pytest.raises(ValueError, match="retain at least"):
+        store.expire_snapshots(keep_last=0)
+
+
+def test_writer_fails_fast_when_head_moved(spark, tmp_path):
+    # merge, compact and expire_snapshots share one guard: a head that
+    # moved between reading it and taking the lock aborts the write, and
+    # the lock is released for the next writer
+    store = NamedGraphStore(spark, str(tmp_path / "hm"), n_buckets=4)
+    store.merge(make(spark, [t("g1", "s", "p", "o")]))
+    for op in ("merge", "compact", "expire_snapshots"):
+        with pytest.raises(RuntimeError, match=f"store advanced.*retry {op}"):
+            with store._head_lock(None, op):
+                pass
+    store.merge(make(spark, [t("g2", "s", "p", "o")]))
+    assert store.last_commit() == 1
+
+
+def test_resume_and_incremental_are_exclusive(spark, sf_dir, tmp_path):
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    with pytest.raises(ValueError, match="exclusive"):
+        run_to_store(spark, sf_dir, str(tmp_path / "x"), resume=True, incremental=True)
 
 
 def test_graphs_on_empty_store(spark, tmp_path):
